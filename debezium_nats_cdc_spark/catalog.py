@@ -108,18 +108,20 @@ def _load_modules() -> None:
 # on-phase half).  Result: every query is driver-green in round N or
 # N−1, by construction.
 #
-# Round-17 plan (ODD phase, per the r16 verdict + the r16 rotation
-# statement in COVERAGE.md).  The 50 ODD-half queries lead the window
-# verbatim in their CORRECTNESS_r15 artifact order — all 50 were
+# Round-17 plan (ODD phase, per the window plan that closes the r16
+# rotation statement in COVERAGE.md).  The ODD-half queries lead the
+# window verbatim in their CORRECTNESS_r15 artifact order — all were
 # r15-green in the driver artifact AND 100/100 green in the repo's own
-# STRICT_r16 sweep on the final r16 tree, so rule B
-# (oldest-green-first) selects exactly this set with no slack slots.
-# Rule A check is recorded per touched module in COVERAGE.md's r17
-# rotation statement (modules touched this round that DEFINE catalog
-# queries must appear below; touched DEPENDENCIES of out-of-window
-# queries get a local strict re-verify instead).
-# Out of window (50): the whole EVEN half — the CORRECTNESS_r16 key
-# set verbatim, all r16-green; they rotate back in r18.
+# STRICT_r16 sweep on the final r16 tree.
+# Rule A after the r17 artifact: removing the dedup operators'
+# cross-query caches and the r8 connected-components twin touched
+# operators/dedup.py and operators/components.py, so the seven queries
+# they define close the window.  With no filler slots in an exact
+# 50-query half, they displace the last seven ODD-half entries
+# (stats_key_skew_report .. events_dau_wau_approx), all r17-green, so
+# rule B still holds for them.
+# Out of window (50): the EVEN half minus those seven dedup queries
+# (all r16-green) plus the seven displaced ODD queries (r17-green).
 # Catalog total: 100 = two exact 50-query halves.
 _WINDOW_ORDER: list[str] = [
     "cdc_subject_route",
@@ -165,13 +167,13 @@ _WINDOW_ORDER: list[str] = [
     "sim_nearest_centroid",
     "sim_embedding_neardup",
     "ann_search_after_lifecycle",
-    "stats_key_skew_report",
-    "stats_join_advisor",
-    "stats_numeric_profile",
-    "stats_join_cardinality",
-    "layout_zorder_stats",
-    "events_dau_wau",
-    "events_dau_wau_approx",
+    "dedup_exact_survivors",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_exact_substring",
+    "dedup_prefix_cluster",
+    "dedup_cluster_assign_delta",
 ]
 
 

@@ -1,33 +1,29 @@
-"""Delta-iteration connected components — the optimized twin of
-``dedup.connected_components`` (VERDICT r10 task 3).
+"""Connected components for near-dup cluster assignment.
 
-``dedup_cluster_assign`` has been the catalog's cost ceiling every
-round since r8 (7.61 s driver / 4.3-4.6 s replay at sf0.1, 2-3x the
-next heaviest query).  The measured decomposition (BENCHLOG round-11,
-tools/cc_decompose.py) splits the ~4.1 s replay median into the shared
-Jaccard pair pipeline (2.65 s median, also paid by
-``dedup_ngram_jaccard``) and the CC fixed-point loop (~1.5 s) — and
-shows the loop's cost at sf0.1 is NOT data: the matched graph is 256
-edges / 477 nodes, so ~1.5 s is pure per-round scheduling +
-localCheckpoint overhead.  That floor is attacked two ways, picked
-adaptively by edge count:
+``dedup_cluster_assign_delta`` clusters the Jaccard pair set of
+``dedup_ngram_jaccard`` into components.  The measured decomposition
+(BENCHLOG round-11) split its cost into the Jaccard pair pipeline and
+the CC fixed-point loop — and showed the loop's cost at sf0.1 is NOT
+data: the matched graph is 256 edges / 477 nodes, so ~1.5 s was pure
+per-round scheduling + localCheckpoint overhead.  That floor is
+attacked two ways, picked adaptively by edge count:
 
 0. **Size-gated driver-local union-find** (the broadcast-join analogy:
    below a threshold, centralizing beats distributing).  Under
    ``_DRIVER_CC_MAX_EDGES`` pairs the edge set is collected and solved
    exactly in O(E α(E)) Python — microseconds at sf0.1 versus O(log d)
    Spark rounds of fixed overhead.  Above the gate (the 100 TB
-   matched-pair set), the delta iteration below is the path; since r12
-   the gate is probed with ONE ``limit(gate+1).collect()`` job over the
+   matched-pair set), the delta iteration below is the path.  The gate
+   is probed with ONE ``limit(gate+1).collect()`` job over the
    checkpointed PAIR set — under the gate that head IS the whole edge
    set, so no separate count job and no symmetric-doubled
    materialization on the driver path (BENCHLOG round-12).
 
-Three changes vs the r8 kernel in the distributed path, none of which
-alter the result (both paths property-tested against the same
-union-find reference):
+The distributed path is min-label propagation with three properties
+(both paths are property-tested against the same union-find
+reference):
 
-1. **Fused convergence probe.**  The r8 loop runs THREE shuffle joins
+1. **Fused convergence probe.**  A plain loop runs THREE shuffle joins
    per round: neighbor-min, pointer-jump, and a labels-vs-previous
    join just to ask "did anything change?".  Here the previous label
    rides along as ``_plbl`` through the round's two joins and the
@@ -52,19 +48,14 @@ union-find reference):
    after round 2 is a tiny fraction of the matched set (most near-dup
    components are pairs/triangles that settle in one round).
 
-3. **Pointer jumping retained.**  ``lbl <- label(lbl)`` still doubles
-   effective label distance per round, so long chains converge in
-   O(log diameter) rounds — the large-star/small-star bound — with the
-   same 20-round safety valve that RAISES rather than returning split
-   clusters.
+3. **Pointer jumping.**  ``lbl <- label(lbl)`` doubles effective label
+   distance per round, so long chains converge in O(log diameter)
+   rounds — the large-star/small-star bound — with a 20-round safety
+   valve that RAISES rather than returning split clusters.
 
-The registered ``dedup_cluster_assign_delta`` query is the driver-
-oracle harness for the kernel (same recursive-CTE true-closure oracle
-as ``dedup_cluster_assign``); the interleaved A/B against the r8
-kernel is recorded in BENCHLOG round-11.  Reference parity: the same
-near-dup clustering contract as ``dedup_cluster_assign``
-(SURVEY §2.K1; reference `sql/init-db.sql` models dedup state only —
-the clustering layer is specified, not implemented, in the reference).
+Reference parity: SURVEY §2.K1 near-dup clustering; the reference
+`sql/init-db.sql` models dedup state only — the clustering layer is
+specified, not implemented, in the reference.
 """
 
 from __future__ import annotations
@@ -73,7 +64,13 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import register
-from .dedup import _CC_MAX_ROUNDS, _cluster_oracle, _jaccard_edges
+from .dedup import _cluster_oracle, _jaccard_edges
+
+# Safety valve only — convergence is detected per round, not assumed.
+# Pointer jumping doubles reachable label distance each round, so 20
+# rounds covers component diameter ~2^20; any graph still moving after
+# that indicates a bug, and we raise rather than return split clusters.
+_CC_MAX_ROUNDS = 20
 
 # Size gate for the driver-local fast path (the broadcast-join analogy:
 # below the threshold, centralizing beats distributing).  500k undirected
@@ -132,9 +129,9 @@ def connected_components_delta(pairs: DataFrame,
     union-find below ``driver_max_edges`` pairs (pass 0 to disable),
     else frontier-restricted min-label propagation with pointer jumping
     and a fused convergence probe — see the module docstring for the
-    exactness argument.  Both paths return the same frame as
-    ``dedup.connected_components`` on every input (property-tested side
-    by side, both paths, in tests/test_corpus_ops.py)."""
+    exactness argument.  Both paths agree with a sequential union-find
+    on every input (property-tested, both paths, in
+    tests/test_corpus_ops.py)."""
     pruned, head = _gated_pairs(pairs, driver_max_edges)
     if head is not None:
         roots = _uf_solve((r[0], r[1]) for r in head)
@@ -199,9 +196,9 @@ def connected_components_delta(pairs: DataFrame,
     "dedup_cluster_assign_delta",
     oracle=_cluster_oracle(),
     survey_ids=["K1"],
-    doc="Near-dup cluster assignment on the adaptive CC kernel "
-        "(VERDICT r10 task 3): same contract and same recursive-CTE "
-        "true-closure oracle as dedup_cluster_assign. Edge-count-gated "
+    doc="Near-dup cluster assignment on the adaptive CC kernel, "
+        "checked against a recursive-CTE true-closure oracle over the "
+        "dedup_ngram_jaccard pair set. Edge-count-gated "
         "strategy pick, the broadcast-join analogy: under 500k matched "
         "pairs the component solve is a driver-local union-find "
         "(O(E a(E)), vs O(log d) Spark rounds of pure scheduling "
@@ -211,8 +208,8 @@ def connected_components_delta(pairs: DataFrame,
         "shuffle runs over last round's CHANGED labels only and the "
         "convergence probe is fused into the round's projection "
         "instead of costing its own labels-vs-previous shuffle join. "
-        "Exactness arguments and the interleaved A/B vs the r8 kernel: "
-        "module docstring + BENCHLOG round-11.",
+        "Exactness arguments: module docstring; measurements: BENCHLOG "
+        "round-11.",
 )
 def dedup_cluster_assign_delta(spark: SparkSession,
                                sf_dir: str) -> DataFrame:

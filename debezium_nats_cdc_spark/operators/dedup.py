@@ -77,19 +77,6 @@ BUCKET_CAP = 1000
 _H2_MASK = (1 << 40) - 1  # keep h1 + 15*h2m < 2^61: no overflow either engine
 
 
-def _h1_h2m_cols(shingle_col: str = "g"):
-    """The (h1, h2m) double-hash column expressions over one md5 of the
-    shingle — the SINGLE definition shared by minhash_signatures.build
-    and _hashed_postings, so the cached-postings path can never silently
-    diverge from the direct path (both feed the same oracles)."""
-    m = F.md5(shingle_col)
-    return (
-        F.conv(F.substring(m, 1, 15), 16, 10).cast("bigint").alias("h1"),
-        F.conv(F.substring(m, 17, 15), 16, 10).cast("bigint")
-        .bitwiseAND(F.lit(_H2_MASK)).alias("h2m"),
-    )
-
-
 # Last (Observation, fallback-metrics DataFrame) per capping operator,
 # so cap-degraded recall is measurable instead of silent: on a
 # boilerplate-heavy corpus the anchor fallback still finds every
@@ -386,8 +373,7 @@ def doc_shingles(docs: DataFrame, id_col: str = "doc_id",
 
 
 def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       hashed: DataFrame | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """K minhash values per doc via md5 double-hashing (Kirsch-Mitzenmacher).
 
     One md5 per posting yields two integers (h1: 60 bits, h2m: 40 bits,
@@ -408,8 +394,13 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     from ..speccache import per_context
 
     def build():
-        h1, h2m = _h1_h2m_cols("g")
-        hash_cols = [F.col(id_col), h1, h2m]
+        m = F.md5("g")
+        hash_cols = [
+            F.col(id_col),
+            F.conv(F.substring(m, 1, 15), 16, 10).cast("bigint").alias("h1"),
+            F.conv(F.substring(m, 17, 15), 16, 10).cast("bigint")
+            .bitwiseAND(F.lit(_H2_MASK)).alias("h2m"),
+        ]
         agg_exprs = [
             F.min(F.col("h1") + F.lit(i) * F.col("h2m")).alias(f"h{i}")
             for i in range(N_HASHES)
@@ -422,18 +413,14 @@ def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
 
     hash_cols, agg_exprs, out_cols = per_context(
         ("minhash_signatures", id_col, text_col), build)
-    if hashed is not None:  # pre-hashed (id, h1, h2m) postings, e.g.
-        postings = hashed   # the _hashed_postings cross-query cache
-    else:
-        postings = doc_shingles(docs, id_col, text_col).select(
-            F.col(id_col), F.explode_outer("gs").alias("g")
-        ).select(*hash_cols)
+    postings = doc_shingles(docs, id_col, text_col).select(
+        F.col(id_col), F.explode_outer("gs").alias("g")
+    ).select(*hash_cols)
     return postings.groupBy(id_col).agg(*agg_exprs).select(*out_cols)
 
 
 def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
-                       hashed: DataFrame | None = None,
                        subgroup_rounds: int = 0) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs.
 
@@ -461,7 +448,7 @@ def minhash_candidates(docs: DataFrame, id_col: str = "doc_id",
         )
         return md5_60(key)
 
-    sig = minhash_signatures(docs, id_col, text_col, hashed=hashed)
+    sig = minhash_signatures(docs, id_col, text_col)
     bands = sig.select(
         id_col,
         "sig",
@@ -566,13 +553,13 @@ def _minhash_oracle() -> str:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        minhash_candidates(d, hashed=_hashed_postings(spark, sf_dir))
+        minhash_candidates(d)
         .filter(F.col("est_jaccard") >= 0.5)
         .orderBy("doc_a", "doc_b")
     )
 
 
-# shared by dedup_ngram_jaccard and dedup_cluster_assign's oracles:
+# shared by dedup_ngram_jaccard and dedup_cluster_assign_delta's oracles:
 # word-3-gram inverted-index pair generation with the df-capped anchor
 # fallback (a.df <= CAP keeps all pairs; over-cap shingles contribute
 # only anchor pairs, a.doc_id = per-shingle min), Jaccard >= 0.2
@@ -643,99 +630,21 @@ def jaccard_pair_counts(gsets: DataFrame, op: str = "jaccard") -> DataFrame:
     )
 
 
-
-_PAIR_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-_POSTINGS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _table_signature(sf_dir: str, name: str = "documents") -> str:
-    """Cheap content fingerprint of a testdata table: mtime+size of the
-    parquet file, or newest-entry mtime + entry count for a directory.
-    Detects a rewrite WITHIN one session so the pair cache can't serve
-    pairs computed from superseded data."""
-    import os
-
-    p = os.path.join(sf_dir.rstrip("/"), f"{name}.parquet")
-    try:
-        if os.path.isdir(p):
-            entries = sorted(os.listdir(p))
-            newest = max(
-                (os.stat(os.path.join(p, f)).st_mtime_ns for f in entries),
-                default=0,
-            )
-            return f"dir:{newest}:{len(entries)}"
-        st = os.stat(p)
-        return f"file:{st.st_mtime_ns}:{st.st_size}"
-    except FileNotFoundError:
-        return "missing"
-
-
-def clear_pair_cache() -> None:
-    """Drop every cached pair/posting set (test/ops hook)."""
-    _PAIR_CACHE.clear()
-    _POSTINGS_CACHE.clear()
-
-
-def _hashed_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-hashed shingle postings (doc_id, h1, h2m), localCheckpoint-
-    cached per (application, sf_dir) with the same content-signature
-    guard as _jaccard_edges.
-
-    dedup_minhash_lsh and dedup_simhash share the identical scan →
-    tokenize → shingle → explode → md5 prefix (minhash's h1 IS
-    md5_60(g), simhash's posting hash): caching the ~0.6 s/warm-run
-    materialization pays once instead of twice per session, and the
-    cached rows are three BIGINTs per posting — far narrower than the
-    shingle strings they replace."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _table_signature(sf_dir)
-    hit = _POSTINGS_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    d = load_table(spark, sf_dir, "documents")
-    df = (
-        doc_shingles(d)
-        .select(F.col("doc_id"), F.explode_outer("gs").alias("g"))
-        .select("doc_id", *_h1_h2m_cols("g"))
-        .localCheckpoint(eager=False)
-    )
-    _POSTINGS_CACHE[key] = (sig, df)
-    return df
-
-
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Thresholded word-3-gram Jaccard pair set, localCheckpoint-cached
-    per (application, sf_dir).
+    """Thresholded word-3-gram Jaccard pair set (doc_a, doc_b, jaccard).
 
-    Both ``dedup_ngram_jaccard`` and ``dedup_cluster_assign`` consume
-    this exact pair set; without the cache the cluster query re-runs the
-    ~3 s shingle→postings→pair pipeline before its CC rounds even start.
-    The checkpoint is lazy (``eager=False``): whichever query runs first
-    materializes it, the other reuses the materialized RDD.  Keyed by
-    applicationId (a restarted session can never see another JVM's
-    checkpoint) and guarded by the table's content signature — a
-    documents.parquet rewritten mid-session invalidates the entry
-    instead of serving stale pairs, and superseded entries are evicted
-    rather than accumulated."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _table_signature(sf_dir)
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
+    The plan ``dedup_ngram_jaccard`` returns and the edge set
+    ``dedup_cluster_assign_delta`` clusters.  Each query builds and runs
+    it itself: nothing is kept between queries, so a query's time and
+    jobs are its own whatever ran before it in the session."""
     d = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pair_counts(doc_shingles(d).filter(F.col("n_toks") >= 3))
     jac = F.col("inter").cast("double") / F.col("uni")
-    df = (
-        pairs.filter(jac >= 0.2)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jac, 4).cast("decimal(10,4)").cast("double").alias("jaccard"),
-        )
-        .localCheckpoint(eager=False)
+    return pairs.filter(jac >= 0.2).select(
+        "doc_a",
+        "doc_b",
+        F.round(jac, 4).cast("decimal(10,4)").cast("double").alias("jaccard"),
     )
-    _PAIR_CACHE[key] = (sig, df)
-    return df
 
 
 @register(
@@ -771,8 +680,7 @@ _CHUNK_BITS = SIMHASH_BITS // 4
 
 
 def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       hashed: DataFrame | None = None) -> DataFrame:
+                       text_col: str = "text") -> DataFrame:
     """60-bit SimHash signature per document (md5-derived shingle hashes).
 
     For each bit position, sum ±1 votes weighted by each shingle-hash's
@@ -804,15 +712,12 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
             out[i] = sig
         return pd.Series(out)
 
-    if hashed is not None:  # shared cache: minhash's h1 IS md5_60(g)
-        postings = hashed.select(F.col(id_col), F.col("h1").alias("h"))
-    else:
-        postings = doc_shingles(docs, id_col, text_col).select(
-            F.col(id_col), F.explode_outer("gs").alias("g")
-        ).select(
-            F.col(id_col),
-            md5_60("g").alias("h"),
-        )
+    postings = doc_shingles(docs, id_col, text_col).select(
+        F.col(id_col), F.explode_outer("gs").alias("g")
+    ).select(
+        F.col(id_col),
+        md5_60("g").alias("h"),
+    )
     return (
         postings.groupBy(id_col)
         .agg(F.collect_list("h").alias("hs"))
@@ -878,7 +783,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — including its Arrow bit-vote stage — runs once, not once per
     # join side.  Pairs expand inside each chunk bucket.
     d = load_table(spark, sf_dir, "documents")
-    sigs = simhash_signatures(d, hashed=_hashed_postings(spark, sf_dir))
+    sigs = simhash_signatures(d)
     chunks = sigs.select(
         "doc_id",
         "sig",
@@ -915,14 +820,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------ cluster assignment ---
 
 
-# Safety valve only — convergence is detected per round, not assumed.
-# Pointer jumping doubles reachable label distance each round, so 20
-# rounds covers component diameter ~2^20; any graph still moving after
-# that indicates a bug, and we raise rather than return split clusters.
-_CC_MAX_ROUNDS = 20
-
-
 def _cluster_oracle() -> str:
+    """Recursive-CTE true-closure oracle of
+    ``components.dedup_cluster_assign_delta``."""
     return f"""
     WITH RECURSIVE {_JACCARD_PAIRS_SQL},
     edges AS (
@@ -942,86 +842,6 @@ def _cluster_oracle() -> str:
              AS cluster_size
     FROM comp
     """
-
-
-def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster assignment — since r12 a delegate to the
-    adaptive CC kernel (VERDICT r10 task 3 / r11 task 1: the swap).
-    The r8 pointer-jumping-only registration is RETIRED from the
-    catalog; ``dedup_cluster_assign_delta`` (components.py, r11-green
-    under the same recursive-CTE true-closure oracle) is the registered
-    cluster-assignment query, and the rename back to this name is
-    queued for r13's ODD window, when the query is in-window anyway
-    (COVERAGE.md r12 rotation statement).  The r8 kernel itself
-    (``connected_components`` below) remains as the reference
-    implementation the property tests compare both paths against."""
-    from .components import dedup_cluster_assign_delta
-
-    return dedup_cluster_assign_delta(spark, sf_dir)
-
-
-def connected_components(pairs: DataFrame,
-                         max_rounds: int = _CC_MAX_ROUNDS) -> DataFrame:
-    """(doc_a, doc_b) undirected pairs -> (doc_id, lbl) with lbl = min
-    id in the node's component.  Min-label propagation with pointer
-    jumping, iterated until a round changes no label (the fixed point —
-    every node then holds its component minimum), with ``max_rounds`` as
-    a safety valve that RAISES rather than silently returning
-    half-merged clusters.
-
-    The convergence probe is cheap by construction: each round's labels
-    are localCheckpoint-materialized anyway (lineage would double per
-    round otherwise), so the changed-label check is one hash join +
-    limit(1) over the already-in-memory matched-doc set — typical
-    corpora converge in 2–3 rounds, so adaptive termination is also
-    faster than any fixed bound sized for the worst case.
-
-    Property-tested against a union-find reference over random graphs
-    and a >2^6-diameter path graph (tests/test_corpus_ops.py)."""
-    sym = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    # materialize the edge set ONCE before deriving anything from it —
-    # labels built from the un-checkpointed sym would re-run the whole
-    # upstream pair pipeline on its own first action (measured: +3 s)
-    sym = sym.localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        prev = labels
-        nbr = (
-            sym.join(prev.withColumnRenamed("doc_id", "src"), "src")
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("lbl").alias("_nlbl"))
-        )
-        labels = prev.join(nbr, "doc_id", "left").select(
-            "doc_id",
-            F.least("lbl", F.coalesce("_nlbl", F.col("lbl"))).alias("lbl"),
-        )
-        # pointer jump: lbl <- label(lbl); invariant lbl <= doc_id makes
-        # the jumped label always <= the current one
-        jump = labels.select(
-            F.col("doc_id").alias("lbl"), F.col("lbl").alias("_jlbl")
-        )
-        labels = labels.join(jump, "lbl", "left").select(
-            "doc_id", F.coalesce("_jlbl", F.col("lbl")).alias("lbl")
-        ).localCheckpoint(eager=True)
-        changed = (
-            labels.join(prev.withColumnRenamed("lbl", "_plbl"), "doc_id")
-            .filter(F.col("lbl") != F.col("_plbl"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_rounds} rounds "
-        f"(component diameter > 2^{max_rounds}); refusing to return "
-        "split clusters"
-    )
 
 
 # ------------------------------------------- exact-substring overlap ---

@@ -114,7 +114,9 @@ def test_quantize_int8_roundtrip_error_bound(spark, tmp_path):
 def test_cluster_assign_chains_transitively(spark, tmp_path):
     """A->B->C near-dup chain (A~C not directly similar) must land in ONE
     cluster with the min doc_id as representative."""
-    from debezium_nats_cdc_spark.operators.dedup import dedup_cluster_assign
+    from debezium_nats_cdc_spark.operators.components import (
+        dedup_cluster_assign_delta,
+    )
 
     base = [f"tok{i}" for i in range(30)]
     a = " ".join(base)
@@ -127,64 +129,10 @@ def test_cluster_assign_chains_transitively(spark, tmp_path):
         (3, "en", "s", 10, c), (4, "en", "s", 10, lone),
     ]).write.parquet(path)
     out = {r["doc_id"]: r for r in
-           dedup_cluster_assign(spark, str(tmp_path)).collect()}
+           dedup_cluster_assign_delta(spark, str(tmp_path)).collect()}
     assert set(out) == {1, 2, 3}  # lone doc has no pairs -> not clustered
     assert {r["cluster_id"] for r in out.values()} == {1}
     assert all(r["cluster_size"] == 3 for r in out.values())
-
-
-def test_connected_components_matches_union_find(spark):
-    """Property: over random graphs, the distributed pointer-jumping
-    loop must agree with a sequential union-find on every node."""
-    import random
-
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
-
-    rng = random.Random(42)
-    for trial in range(5):
-        n = rng.randint(5, 60)
-        m = rng.randint(1, 2 * n)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        # include one long path to stress diameter
-        chain = list(range(100, 100 + rng.randint(3, 20)))
-        edges += list(zip(chain, chain[1:]))
-
-        parent = {}
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-        def union(a, b):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        for a, b in edges:
-            union(a, b)
-        expected = {x: find(x) for x in parent}
-
-        df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r["doc_id"]: r["lbl"]
-               for r in connected_components(df).collect()}
-        assert got == expected, f"trial {trial}: {got} != {expected}"
-
-
-def test_connected_components_long_path_converges(spark):
-    """A 200-node path has diameter 199 > 2^6: the old fixed-6-round
-    loop silently split it; adaptive convergence must label every node
-    with the path minimum (and must NOT hit the safety valve, since
-    pointer jumping needs only ~log2(199) ≈ 8 rounds)."""
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
-
-    edges = [(i, i + 1) for i in range(200)]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r["doc_id"]: r["lbl"] for r in connected_components(df).collect()}
-    assert set(got) == set(range(201))
-    assert set(got.values()) == {0}
 
 
 def test_bucket_cap_anchor_fallback_keeps_recall_and_is_observed(
@@ -246,49 +194,95 @@ def test_bucket_cap_anchor_fallback_keeps_recall_and_is_observed(
 
 
 def test_pair_cache_invalidates_on_table_rewrite(spark, tmp_path):
-    """A documents table rewritten mid-session must yield FRESH Jaccard
-    pairs, not the cached pre-rewrite set (VERDICT r3 task #7)."""
-    import time
-
-    from debezium_nats_cdc_spark.operators.dedup import dedup_ngram_jaccard
+    """A documents table rewritten mid-session must yield FRESH pairs
+    from every dedup query — nothing computed from the pre-rewrite
+    table may be served after it (VERDICT r3 task #7)."""
+    from debezium_nats_cdc_spark.operators.dedup import (
+        dedup_minhash_lsh,
+        dedup_ngram_jaccard,
+    )
 
     sf = str(tmp_path)
-    a = "alpha beta gamma delta epsilon zeta"
-    b = "alpha beta gamma delta epsilon eta"
-    c = "one two three four five six"
-    _docs(spark, [(1, "en", "s", 1, a), (2, "en", "s", 1, b),
-                  (3, "en", "s", 1, c)]).coalesce(1).write.mode(
-        "overwrite").parquet(sf + "/documents.parquet")
-    first = {(r["doc_a"], r["doc_b"])
-             for r in dedup_ngram_jaccard(spark, sf).collect()}
-    assert first == {(1, 2)}
-    # cache hit: same signature returns the same checkpointed frame
-    assert dedup_ngram_jaccard(spark, sf) is dedup_ngram_jaccard(spark, sf)
+    words = [f"w{i}" for i in range(39)]
+    nums = [f"n{i}" for i in range(39)]
+    a, b = " ".join(words + ["x"]), " ".join(words + ["y"])
+    c, d = " ".join(nums + ["x"]), " ".join(nums + ["y"])
 
-    time.sleep(0.01)  # ensure a distinct mtime_ns on fast filesystems
-    _docs(spark, [(1, "en", "s", 1, a), (2, "en", "s", 1, c),
-                  (3, "en", "s", 1, "one two three four five seven")]
-          ).coalesce(1).write.mode("overwrite").parquet(
-        sf + "/documents.parquet")
-    fresh = {(r["doc_a"], r["doc_b"])
-             for r in dedup_ngram_jaccard(spark, sf).collect()}
-    assert fresh == {(2, 3)}
+    def write(rows):
+        _docs(spark, rows).coalesce(1).write.mode("overwrite").parquet(
+            sf + "/documents.parquet")
+
+    def pairs(query):
+        return {(r["doc_a"], r["doc_b"]) for r in query(spark, sf).collect()}
+
+    write([(1, "en", "s", 1, a), (2, "en", "s", 1, b), (3, "en", "s", 1, c)])
+    assert pairs(dedup_ngram_jaccard) == {(1, 2)}
+    assert pairs(dedup_minhash_lsh) == {(1, 2)}
+
+    write([(1, "en", "s", 1, a), (2, "en", "s", 1, c), (3, "en", "s", 1, d)])
+    assert pairs(dedup_ngram_jaccard) == {(2, 3)}
+    assert pairs(dedup_minhash_lsh) == {(2, 3)}
+
+
+@pytest.mark.parametrize("query", ["dedup_cluster_assign_delta",
+                                   "dedup_minhash_lsh"])
+def test_dedup_results_and_jobs_do_not_depend_on_query_order(
+        spark, tmp_path, query):
+    """A dedup query does its own work whatever ran before it in the
+    session: it runs cold, then again after dedup_ngram_jaccard and
+    dedup_simhash ran on the same table, and both runs launch the same
+    number of Spark jobs and return the same rows (ROADMAP aim 2:
+    results never depend on query order)."""
+    from debezium_nats_cdc_spark import catalog
+    from debezium_nats_cdc_spark.operators.dedup import (
+        dedup_ngram_jaccard,
+        dedup_simhash,
+    )
+
+    rows = []
+    for f in range(4):  # four near-dup families of three docs each
+        base = [f"f{f}w{i}" for i in range(30)]
+        for m in range(3):
+            text = " ".join(base[:29] + [f"tail{f}_{m}"])
+            rows.append((10 * f + m, "en", "s", len(text), text))
+    rows.append((99, "en", "s", 10, " ".join(f"z{i}" for i in range(30))))
+    sf = str(tmp_path)
+    _docs(spark, rows).write.parquet(sf + "/documents.parquet")
+    sc = spark.sparkContext
+    fn = catalog.queries()[query]
+
+    def run(group):
+        sc.setJobGroup(group, group)
+        try:
+            got = sorted(tuple(r) for r in fn(spark, sf).collect())
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return got, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cold_rows, cold_jobs = run(f"order-cold-{query}")
+    assert cold_rows  # the families give the query something to find
+    dedup_ngram_jaccard(spark, sf).collect()
+    dedup_simhash(spark, sf).collect()
+    warm_rows, warm_jobs = run(f"order-warm-{query}")
+    assert warm_rows == cold_rows, "rows depend on query order"
+    assert warm_jobs == cold_jobs, (
+        f"{cold_jobs} jobs cold vs {warm_jobs} after its neighbours ran")
 
 
 @pytest.mark.parametrize("gate", [500_000, 0],
                          ids=["driver_path", "distributed_path"])
-def test_connected_components_delta_matches_union_find_and_v1(spark, gate):
+def test_connected_components_delta_matches_union_find(spark, gate):
     """Property (VERDICT r10 task 3): BOTH adaptive arms — the
     size-gated driver union-find (gate open) and the
     frontier-restricted delta loop (gate=0 forces it) — agree with a
-    sequential union-find AND with the r8 kernel on every node over
-    random graphs + a diameter-stressing path."""
+    sequential union-find on every node over random graphs + a
+    diameter-stressing path."""
     import random
 
     from debezium_nats_cdc_spark.operators.components import (
         connected_components_delta,
     )
-    from debezium_nats_cdc_spark.operators.dedup import connected_components
 
     rng = random.Random(1107)
     for trial in range(5):
@@ -322,9 +316,6 @@ def test_connected_components_delta_matches_union_find_and_v1(spark, gate):
                for r in connected_components_delta(
                    df, driver_max_edges=gate).collect()}
         assert got == expected, f"trial {trial}"
-        v1 = {r["doc_id"]: r["lbl"]
-              for r in connected_components(df).collect()}
-        assert got == v1, f"trial {trial} disagrees with the r8 kernel"
 
 
 def test_connected_components_delta_long_path_converges(spark):

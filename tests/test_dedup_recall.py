@@ -25,6 +25,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from debezium_nats_cdc_spark.operators import dedup
+from debezium_nats_cdc_spark.operators.components import (
+    connected_components_delta,
+)
 
 EST_THRESHOLD = 0.5
 
@@ -49,7 +52,7 @@ def _components(spark, pairs):
         return frozenset()
     df = spark.createDataFrame(sorted(pairs), "doc_a long, doc_b long")
     comp = {}
-    for r in dedup.connected_components(df).collect():
+    for r in connected_components_delta(df).collect():
         comp.setdefault(r["lbl"], set()).add(r["doc_id"])
     return frozenset(frozenset(v) for v in comp.values())
 

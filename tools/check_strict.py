@@ -1,6 +1,6 @@
 """STRICT replica of the driver's t2 correctness gate (worst-case assumptions).
 
-Differences from tools/check_correctness.py (the lenient replica):
+Stricter than a lenient row comparison in three ways:
   - Spark side collected from a VANILLA session (driver owns the session;
     no tuned confs) via .toPandas()
   - DuckDB side collected via .df()  (NOT fetchall) — this converts

@@ -76,7 +76,6 @@ def main() -> None:
 
     from debezium_nats_cdc_spark.session import get_session
     from debezium_nats_cdc_spark import catalog
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
 
     spark = get_session("opt-probe")
     ents = catalog.entries()
@@ -91,7 +90,6 @@ def main() -> None:
         fn = ents[q].fn
         times = []
         for i in range(args.reps):
-            clear_pair_cache()
             spark.sparkContext.setJobDescription(f"probe:{q}#{i}")
             t0 = time.time()
             fn(spark, args.sf_dir).write.format("noop") \
@@ -107,7 +105,6 @@ def main() -> None:
             "median": round(statistics.median(times), 3),
         }
         if args.jobs:
-            clear_pair_cache()
             n_jobs, n_stages = count_jobs(
                 spark,
                 lambda: fn(spark, args.sf_dir).write.format("noop")

@@ -194,19 +194,15 @@ def main() -> None:
     spark = get_session("scale-heavy-probe")
     spark.sparkContext.setLogLevel("ERROR")
     build_big(spark)
-    from debezium_nats_cdc_spark.operators.dedup import clear_pair_cache
-
     ents = catalog.entries()
     for q in QUERIES:  # warm codegen both scales
         for d in (SF_DIR, BIG_DIR):
-            clear_pair_cache()  # same per-query discipline as bench.py
             ents[q].fn(spark, d).write.format("noop").mode("overwrite").save()
     times: dict[tuple[str, str], list[float]] = {}
     for r in range(REPS):
         order = QUERIES if r % 2 == 0 else list(reversed(QUERIES))
         for q in order:
             for d in (SF_DIR, BIG_DIR):
-                clear_pair_cache()
                 t0 = time.time()
                 ents[q].fn(spark, d).write.format("noop") \
                     .mode("overwrite").save()
